@@ -48,7 +48,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import ClaimCheckError
@@ -158,8 +158,22 @@ class MinHashIndex:
             spread=False,
         ).localCheckpoint()
 
-    def _sig_array(self):
-        return F.array(*[F.col(f"s{j}") for j in range(self.num_hashes)]).alias("sig")
+    # The two wide expressions below are each ONE SQL string parsed by one
+    # F.expr call (3 py4j round trips). Built from F.* calls and Column
+    # operators, every call is a round trip: ~500 for the array and ~1,100
+    # for the 32 sig[j] projections at num_hashes=32.
+
+    def _sig_array(self, alias: str = "sig") -> Column:
+        """``array(s0..s{n-1})`` — the signature columns as one array."""
+        cols = ", ".join(f"s{j}" for j in range(self.num_hashes))
+        return F.expr(f"array({cols}) AS {alias}")
+
+    def _sig_elems(self, src: str) -> Column:
+        """Struct ``__s`` of ``s0..s{n-1}`` read from the array column
+        ``src`` (select ``"__s.*"`` to unpack) — the inverse of
+        :meth:`_sig_array`, for rebuilding band keys from a stored sig."""
+        elems = ", ".join(f"'s{j}', {src}[{j}]" for j in range(self.num_hashes))
+        return F.expr(f"named_struct({elems}) AS __s")
 
     # -- write path ----------------------------------------------------------
 
@@ -192,9 +206,15 @@ class MinHashIndex:
         the historical signature :meth:`remove` would need to find them.
         ``assume_new=True`` skips the re-add probe entirely (pure O(batch)
         — no read of the signature store at all) for callers who KNOW the
-        stream never re-sends a doc_id; re-adding under that promise leaves
-        stale band rows, the same class of contract as
-        ``LakeTable.append``'s new-keys promise.
+        stream never re-sends a doc_id, the same class of contract as
+        ``LakeTable.append``'s new-keys promise. Nothing checks it. A doc
+        re-added under it with changed text keeps its OLD band rows live
+        (no tombstones are written), and they carry the old denormalized
+        ``sig``; resolving compactions keep them too. A later :meth:`probe`
+        that reaches the doc only through one of those stale band keys
+        verifies against the old signature, so it reports a wrong
+        ``est_jaccard_ppm`` for the pair — or a pair the current text would
+        not produce. :meth:`remove` followed by a plain add repairs the doc.
 
         Idempotent per ``epoch_id``: the signature append commits LAST, so a
         replayed epoch recomputes the identical split against unchanged
@@ -215,6 +235,7 @@ class MinHashIndex:
             F.lit(seq).cast("long").alias("seq"),
             F.lit("upsert").alias("op"),
         )
+        sig_cols = ["sig"] if self._band_sig else []
         retract = None
         if not assume_new and self.sigs_t.current_version() > 0:
             stored = (
@@ -223,14 +244,15 @@ class MinHashIndex:
                 .agg(F.max_by("sig", "seq").alias("__old_sig"))
             )
             joined = new_sigs.join(stored, "doc_id", "left").localCheckpoint()
-            unchanged = F.col("__old_sig").isNotNull() & (
-                F.col("__old_sig") == F.col("sig")
-            )
             # unchanged re-adds write nothing; changed docs retract old bands
-            write_docs = joined.filter(~unchanged)
-            changed = joined.filter(
-                F.col("__old_sig").isNotNull() & (F.col("__old_sig") != F.col("sig"))
-            )
+            is_write = "NOT (__old_sig IS NOT NULL AND __old_sig = sig)"
+            is_changed = "__old_sig IS NOT NULL AND __old_sig != sig"
+            write_docs = joined.filter(is_write)
+            changed = joined.filter(is_changed)
+            # both emptiness checks below as one query over the checkpoint
+            n_changed, n_write = joined.selectExpr(
+                f"count_if({is_changed})", f"count_if({is_write})"
+            ).first()
             # Retract only OLD-minus-NEW band keys. A small edit keeps most
             # band slices identical (LSH's premise), and both the tombstone
             # merge and the new-band append below use the SAME seq — a delete
@@ -245,18 +267,19 @@ class MinHashIndex:
             retract = changed.select(
                 F.col("doc_id").alias("__id"),
                 *([F.col("__old_sig").alias("sig")] if self._band_sig else []),
-                *[F.col("__old_sig")[j].alias(f"s{j}") for j in range(self.num_hashes)],
-            )
+                self._sig_elems("__old_sig"),
+            ).select("__id", *sig_cols, "__s.*")
             kept_bands = changed.select(
-                F.col("doc_id").alias("__id"),
-                *[F.col("sig")[j].alias(f"s{j}") for j in range(self.num_hashes)],
-            )
+                F.col("doc_id").alias("__id"), self._sig_elems("sig")
+            ).select("__id", "__s.*")
             new_sigs = write_docs.drop("__old_sig")
             per_doc = per_doc.join(new_sigs.select(F.col("doc_id").alias("__id")), "__id")
+            has_new = n_write > 0
+        else:
+            n_changed, has_new = 0, not new_sigs.isEmpty()
         sub = lambda tag: None if eid is None else f"{eid}#{tag}"
-        sig_cols = ["sig"] if self._band_sig else []
         band_retract = {"skipped": True}
-        if retract is not None and not retract.isEmpty():
+        if n_changed:
             band_retract = self.bands_t.merge(
                 band_table(
                     retract,
@@ -281,7 +304,7 @@ class MinHashIndex:
                 ),
                 epoch_id=sub("m"),
             )
-        if new_sigs.isEmpty():
+        if not has_new:
             band_stats = {"skipped": True}
         else:
             # band rows carry the doc's full signature array (denormalized —
@@ -350,11 +373,12 @@ class MinHashIndex:
         # re-add leaves its earlier rows (and their band keys) live, and a
         # retraction must tombstone every historical band key too
         stored = self.sigs_t.probe(keys)
-        per_doc = stored.select(
-            F.col("doc_id").alias("__id"),
-            "sig",
-            *[F.col("sig")[j].alias(f"s{j}") for j in range(self.num_hashes)],
-        ).distinct().localCheckpoint()  # feeds both tombstone merges
+        per_doc = (
+            stored.select(F.col("doc_id").alias("__id"), "sig", self._sig_elems("sig"))
+            .select("__id", "sig", "__s.*")
+            .distinct()
+            .localCheckpoint()  # feeds both tombstone merges
+        )
         seq = self.sigs_t.current_version() + 1
         sig_stats = self.sigs_t.merge(
             per_doc.select(
@@ -409,7 +433,15 @@ class MinHashIndex:
         round-trip total after featurization. Nothing scales with the index
         except the pruned bucket fraction. Indexes written before the sig
         column existed fall back to a second bucket-pruned signature fetch
-        for candidate partners."""
+        for candidate partners.
+
+        Partner signatures come from the matched band rows, so results rest
+        on the add-time invariant "a doc's live band rows are exactly its
+        latest signature's band keys". A doc re-added with changed text
+        under ``add(assume_new=True)`` breaks it: its stale band rows stay
+        live with the old ``sig``, and a probe that reaches the doc only
+        through a stale band key reports a wrong ``est_jaccard_ppm`` for the
+        pair (see :meth:`add`)."""
         if not 0 < threshold <= 1:
             raise ClaimCheckError("threshold must be in (0, 1]")
         thr_ppm = int(round(threshold * 1_000_000))
@@ -445,7 +477,7 @@ class MinHashIndex:
             .select(F.col("doc_id").alias("indexed_id"), F.col("sig").alias("__sig_i"))
         )
         probe_sigs = per_doc.select(
-            F.col("__id").alias("probe_id"), self._sig_array().alias("__sig_p")
+            F.col("__id").alias("probe_id"), self._sig_array("__sig_p")
         )
         # Join strategy (guide §3.1): the probe-sig relation is exactly the
         # batch (O(batch) by design) while the candidate PAIR set is what
@@ -544,7 +576,7 @@ class MinHashIndex:
         fraction of either shuffle. The batch side stays a broadcast under
         the same row budget as the legacy path."""
         probe_sigs = per_doc.select(
-            F.col("__id").alias("probe_id"), self._sig_array().alias("__sig_p")
+            F.col("__id").alias("probe_id"), self._sig_array("__sig_p")
         )
         if per_doc.count() <= _SIG_BROADCAST_ROWS:
             probe_sigs = F.broadcast(probe_sigs)

@@ -56,6 +56,7 @@ import json
 import os
 import random
 import tempfile
+import threading
 import time
 import uuid
 from pathlib import Path
@@ -69,6 +70,14 @@ from ..operators.dedup import lww_dedup
 
 BUCKET_COL = "__bucket"
 _PB_COL = "__pb"  # physical partition dir column (duplicate of __bucket)
+
+# Above this many paths (Spark's default: 32) building a file relation lists
+# the paths with a distributed "Listing leaf files" job. _scan raises it for
+# the duration of one relation build; the lock keeps concurrent builds on one
+# session from restoring each other's value.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_SPARK_LISTING_DEFAULT = 32
+_listing_lock = threading.Lock()
 
 
 class LakeConflictError(ClaimCheckError):
@@ -738,6 +747,34 @@ class LakeTable:
     def _schema(self, manifest: dict) -> T.StructType | None:
         return T.StructType.fromJson(json.loads(manifest["schema"])) if manifest["schema"] else None
 
+    def _scan(self, schema: T.StructType, files: list[str]) -> DataFrame:
+        """The one data-file read every path shares: ``files`` (absolute,
+        from a manifest) under ``schema`` plus the bucket column.
+
+        The manifest already names every file, so there is nothing to
+        discover: the paths are listed serially on the driver (one stat per
+        path) instead of by Spark's distributed listing job, which it
+        launches for reads over more than 32 paths (building a 96-file
+        relation, local[4] on a 4-core host: median 0.59 s with that job,
+        0.07 s serial). The threshold is raised only while this relation is
+        built, then restored (or unset if it was unset)."""
+        reader = self.spark.read.schema(
+            T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
+        )
+        conf = self.spark.conf
+        with _listing_lock:
+            prev = conf.get(_LISTING_THRESHOLD, None)
+            if len(files) <= int(prev or _SPARK_LISTING_DEFAULT):
+                return reader.parquet(*files)
+            conf.set(_LISTING_THRESHOLD, str(len(files)))
+            try:
+                return reader.parquet(*files)
+            finally:
+                if prev is None:
+                    conf.unset(_LISTING_THRESHOLD)
+                else:
+                    conf.set(_LISTING_THRESHOLD, prev)
+
     def read(
         self,
         version: int | None = None,
@@ -783,9 +820,7 @@ class LakeTable:
                 empty_schema = T.StructType(empty_schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
             df = self.spark.createDataFrame([], empty_schema)
         else:
-            df = self.spark.read.schema(
-                T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-            ).parquet(*files)
+            df = self._scan(schema, files)
         if where:
             for c, (lo, hi) in where.items():
                 if c in df.columns:
@@ -863,9 +898,7 @@ class LakeTable:
         self._record_probe_stats(buckets, m, files, skipped_by_stats=len(rels) - len(kept))
         if not files:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(
-            T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-        ).parquet(*files)
+        df = self._scan(schema, files)
         pred = None
         for k in keys:
             kt = tuple(k) if isinstance(k, (list, tuple)) else (k,)
@@ -935,9 +968,7 @@ class LakeTable:
         )
         if not files:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(
-            T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-        ).parquet(*files)
+        df = self._scan(schema, files)
         # no broadcast hint: the probe set scales with the BATCH (10^6 band
         # keys is hundreds of MB) — let AQE pick broadcast when it is small;
         # the fallback shuffle is keyed by bucket_cols and bounded by it
@@ -1074,9 +1105,7 @@ class LakeTable:
             if not files:
                 df = self.spark.createDataFrame([], schema_with_bucket)
             else:
-                df = self.spark.read.schema(
-                    T.StructType(s.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-                ).parquet(*files)
+                df = self._scan(s, files)
                 df = _conform(df, schema_with_bucket)
             if self.op_col and self.op_col in [f.name for f in df.schema.fields]:
                 df = df.filter(
@@ -1240,9 +1269,7 @@ class LakeTable:
         ]
         combined = _conform(upd, schema_with_bucket)
         if base_files and cur_schema is not None:
-            base = self.spark.read.schema(
-                T.StructType(cur_schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-            ).parquet(*base_files)
+            base = self._scan(cur_schema, base_files)
             combined = _conform(base, schema_with_bucket).unionByName(combined)
 
         # Deletes are kept as TOMBSTONES (row retained with op == delete_value),
@@ -1466,7 +1493,12 @@ class LakeTable:
         conformed = _conform(rows, schema)
         out = conformed.withColumn(BUCKET_COL, self.bucket_expr(conformed))
         vdir = self.root / "data" / f"v{cur_version + 1}-{uuid.uuid4().hex[:8]}"
+        # at most one write task per core: hash-partitioning by bucket puts
+        # each bucket in exactly one task, so every bucket still gets exactly
+        # one file, while a 16-bucket append on 4 cores runs one wave of 4
+        # tasks instead of four waves of 1-bucket tasks
         n_part = max(len(set(touched_hint)), 1) if touched_hint is not None else self.num_buckets
+        n_part = min(n_part, self.spark.sparkContext.defaultParallelism)
         out = out.repartition(n_part, F.col(BUCKET_COL)).withColumn(
             _PB_COL, F.col(BUCKET_COL)
         )
@@ -1643,9 +1675,7 @@ class LakeTable:
                 return {"skipped": True, "reason": "no bucket at file threshold"}
         schema = self._schema(manifest)
         files = [str(self.root / f) for b in selected for f in manifest["files"][b]]
-        df = self.spark.read.schema(
-            T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-        ).parquet(*files)
+        df = self._scan(schema, files)
         z_boundaries: dict[str, list] | None = None
         if cluster_by:
             missing = [c for c in cluster_by if c not in schema.names]
@@ -1767,9 +1797,7 @@ class LakeTable:
         old_count = self.num_buckets
         schema = self._schema(manifest)
         files = [str(self.root / f) for fs in manifest["files"].values() for f in fs]
-        df = self.spark.read.schema(
-            T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-        ).parquet(*files)
+        df = self._scan(schema, files)
         out = df.withColumn(BUCKET_COL, self.bucket_expr(df, new_num_buckets))
         out = out.withColumn(_PB_COL, F.col(BUCKET_COL))
         out = out.repartition(new_num_buckets, F.col(_PB_COL))

@@ -62,6 +62,33 @@ def test_append_accumulates_files_without_rewrites(spark, lake_dir):
     assert set(t.committed_epochs()) == {"e1", "e2"}
 
 
+def test_read_over_many_files_runs_no_listing_job(spark, lake_dir):
+    """Building a read over more than 32 live files runs no Spark job before
+    an action: the manifest names every file, so the paths are listed
+    serially on the driver, not by Spark's distributed "Listing leaf files"
+    job (one job launch per relation build). The listing threshold is
+    restored after the build. Also pins the append write shape: one file
+    per bucket, however few write tasks the cluster gives it."""
+    t = _table(spark, lake_dir, num_buckets=40)
+    t.append(_batch(spark, "a", 0, n=2000), epoch_id="e1")
+    files = t._manifest(t.current_version())["files"]
+    assert len(files) == 40 and all(len(fs) == 1 for fs in files.values())
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key, None)
+    sc = spark.sparkContext
+    group = "lake-read-relation-build"
+    sc.setJobGroup(group, "relation build, no action")
+    try:
+        df = t.read()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert spark.conf.get(key, None) == before
+    assert df.count() == 2000
+
+
 def test_append_epoch_exactly_once(spark, lake_dir):
     t = _table(spark, lake_dir)
     t.append(_batch(spark, "a", 0), epoch_id="e1")

@@ -409,14 +409,33 @@ def test_iceberg_rollback_deletes_epochs_before_restore():
     between the two statements errs toward over-deletion (idempotent
     re-merge) and never toward under-deletion (stale epoch rows silently
     skipping a corrected replay after the data restore). No Iceberg runtime
-    in this sandbox, so the statement order is pinned on the source."""
-    import inspect
-
+    in this sandbox, so the statements rollback() sends are recorded
+    through a fake ``spark.sql`` and checked in the order they were sent."""
     from kafka_connect_claim_check_smt_spark.plans.iceberg import IcebergTable
 
-    src = inspect.getsource(IcebergTable.rollback)
-    assert "DELETE FROM" in src and "rollback_to_snapshot" in src
-    assert src.index("DELETE FROM") < src.index("CALL system.rollback_to_snapshot")
+    sent = []
+
+    class _Result:
+        def collect(self):
+            return [(7,)]  # the restored snapshot's sequence number
+
+    class _RecordingSpark:
+        def sql(self, stmt):
+            sent.append(" ".join(stmt.split()))
+            return _Result()
+
+    # the constructor refuses without an Iceberg runtime on the classpath
+    t = object.__new__(IcebergTable)
+    t.spark, t.identifier, t._epochs = _RecordingSpark(), "cat.db.t", "cat.db.t_epochs"
+    assert t.rollback(42) == {"skipped": False, "restored": 42}
+    assert [s.split()[0] for s in sent] == ["SELECT", "DELETE", "CALL"]
+    assert sent[1] == (
+        "DELETE FROM cat.db.t_epochs "
+        "WHERE sequence_number > 7 OR sequence_number IS NULL"
+    )
+    assert sent[2] == (
+        "CALL system.rollback_to_snapshot(table => 'cat.db.t', snapshot_id => 42)"
+    )
 
 
 # -- change data feed (read_changes) ------------------------------------------

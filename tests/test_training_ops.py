@@ -11,9 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_claim_check_smt_spark.operators.minhash import (
+    band_table,
+    lsh_band_keys,
     minhash_lsh_pairs,
+    minhash_signature,
     ngram_jaccard_pairs,
     shingles,
+    signature_table,
     simhash_dup_pairs,
 )
 from kafka_connect_claim_check_smt_spark.operators.multimodal import (
@@ -1449,3 +1453,54 @@ class TestHashSplit:
             hash_split(docs, "doc_id", fractions={"a": 1.2, "b": -0.2})
         with pytest.raises(ValueError, match="at least one"):
             hash_split(docs, "doc_id", fractions={})
+
+
+@pytest.mark.parametrize("hasher", ["md5", "sha256"])
+def test_signature_and_band_tables_match_array_path(spark, hasher):
+    """signature_table builds its 32 minima, and band_table its 8 band
+    keys, as one SQL string each; both must stay bit-identical to the
+    per-row array path (minhash_signature / lsh_band_keys), and the gram
+    sets to the distinct shingles. Covers empty texts and texts shorter
+    than k, which hash as one whole-text shingle."""
+    texts = [
+        "",
+        "a",
+        "abcdefg",
+        "abcdefgh",
+        "near duplicate text, version one",
+        "near duplicate text, version two",
+        "ünïcödé ✓ text with a few more characters",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    per_doc = signature_table(
+        docs, "doc_id", "text", hasher=hasher, spread=False, with_gram_sets=True
+    )
+    assert per_doc.columns == ["__id", *[f"s{j}" for j in range(32)], "__sh"]
+    assert {t for c, t in per_doc.dtypes if c.startswith("s")} == {"bigint"}
+    rows = per_doc.collect()
+    got_sig = {r["__id"]: [r[f"s{j}"] for j in range(32)] for r in rows}
+    got_bands = sorted(
+        tuple(r)
+        for r in band_table(per_doc, bands=8, rows_per_band=4)
+        .select("__id", "band", "bh")
+        .collect()
+    )
+
+    arr = docs.select(
+        "doc_id",
+        minhash_signature(shingles("text", 8, hasher=hasher)).alias("sig"),
+        F.sort_array(shingles("text", 8, hasher=hasher)).alias("sh"),
+    )
+    want = arr.collect()
+    want_bands = sorted(
+        (r["doc_id"], r["b"]["band"], r["b"]["bh"])
+        for r in arr.select(
+            "doc_id", F.explode(lsh_band_keys(F.col("sig"), 8, 4)).alias("b")
+        ).collect()
+    )
+    assert got_sig == {r["doc_id"]: list(r["sig"]) for r in want}
+    assert all(v is not None for sig in got_sig.values() for v in sig)
+    assert {r["__id"]: list(r["__sh"]) for r in rows} == {
+        r["doc_id"]: list(r["sh"]) for r in want
+    }
+    assert got_bands == want_bands and len(got_bands) == 8 * len(texts)
